@@ -9,7 +9,9 @@ ONE JSON line:
 ``queries`` map carries per-query seconds plus a ``knn_batch_qps``
 throughput figure (batched queries/sec — the BASELINE.md comparison
 point; the reference reports serial single-query QPS, we report the
-batch-throughput equivalent per SURVEY.md §6 caveats).
+batch-throughput equivalent per SURVEY.md §6 caveats) and its inverse
+``knn_batch_sec`` (seconds per batched query), which, like every other
+row, is lower-is-better.
 """
 
 from __future__ import annotations
@@ -269,10 +271,12 @@ def main() -> int:
         timings["knn_batch_all_vs_all"] = round(dt, 3)
         spreads["knn_batch_all_vs_all"] = round(max(reps) - min(reps), 3)
         timings["knn_batch_qps"] = round(n_q / dt, 1)
+        timings["knn_batch_sec"] = round(dt / n_q, 6)
         total += dt
     except Exception as exc:  # noqa: BLE001
         timings["knn_batch_all_vs_all"] = -1.0
         timings["knn_batch_qps"] = -1.0
+        timings["knn_batch_sec"] = -1.0
         errors["knn_batch_all_vs_all"] = repr(exc)[:300]
 
     good = [m for m in sentinel_meds if m > 0]

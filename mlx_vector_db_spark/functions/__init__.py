@@ -9,6 +9,7 @@ from mlx_vector_db_spark.functions.vector import (
     register_sql_functions,
     score_for_metric,
     similarity_for_metric,
+    vector_literal,
 )
 
 __all__ = [
@@ -22,4 +23,5 @@ __all__ = [
     "register_sql_functions",
     "score_for_metric",
     "similarity_for_metric",
+    "vector_literal",
 ]

@@ -25,6 +25,10 @@ agree with an independent float64 oracle to ~1e-12.
 
 from __future__ import annotations
 
+import json
+from collections.abc import Sequence
+
+import numpy as np
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,6 +42,29 @@ METRICS = ("cosine", "euclidean", "dot_product")
 def _as_double(v: Column | str) -> Column:
     col = F.col(v) if isinstance(v, str) else v
     return col.cast("array<double>")
+
+
+def vector_literal(
+    values: Sequence[float] | Sequence[Sequence[float]] | np.ndarray,
+) -> Column:
+    """A vector as ONE ``array<double>`` literal, or a matrix (one inner
+    list per row) as ONE ``array<array<double>>`` literal.
+
+    ``F.lit(list)`` and ``F.array(*[F.lit(x) ...])`` build one py4j
+    literal per element: ``dim`` JVM round trips per query vector and
+    ``nlist * dim`` per centroid matrix, paid on every plan build. This
+    form ships the values as one JSON string; Catalyst constant-folds
+    ``from_json`` over a literal, so the optimized plan holds the same
+    single folded array literal. Python's shortest round-trip float
+    digits and Jackson's ``NaN``/``Infinity`` tokens keep every double
+    bit-exact, -0.0 and subnormals included."""
+    arr = np.asarray(values)
+    if arr.dtype == object:
+        raise TypeError("vector literal components must be numbers")
+    if arr.ndim not in (1, 2):
+        raise ValueError(f"vector literal must be 1-d or 2-d (got {arr.ndim}-d)")
+    dtype = "array<double>" if arr.ndim == 1 else "array<array<double>>"
+    return F.from_json(F.lit(json.dumps(arr.astype(np.float64).tolist())), dtype)
 
 
 def dot_product(a: Column | str, b: Column | str) -> Column:

@@ -31,7 +31,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mlx_vector_db_spark.functions.vector import dot_product
+from mlx_vector_db_spark.functions.vector import dot_product, vector_literal
 from mlx_vector_db_spark.operators.knn import knn_join, knn_query
 
 __all__ = [
@@ -58,6 +58,32 @@ __all__ = [
 ASSIGN_ARROW_MIN_K = 128
 
 
+def _cell_kernel(centroids: np.ndarray):
+    """The argmin-centroid numpy kernel every batch assignment path
+    shares: ``kernel(X, with_dist=False) -> (cells int32, sq_dists or
+    None)`` for a float64 row matrix ``X``, via one BLAS matmul.
+
+    Ties break toward the LARGER id — the ``array_max(struct)`` rule of
+    the expression path (:meth:`IVFIndex.assign_expr`), so every path
+    agrees exactly. The centroid matrix is stored reversed because
+    argmax over a reversed numpy VIEW falls off the contiguous fast
+    path (measured 40x the matmul)."""
+    C = np.asarray(centroids, dtype=np.float64)[::-1].copy()
+    last = len(C) - 1
+    half_sq = 0.5 * (C**2).sum(axis=1)
+
+    def kernel(X: np.ndarray, with_dist: bool = False):
+        scores = X @ C.T - half_sq  # argmax == argmin ||x-c||
+        rev_idx = scores.argmax(axis=1)  # first max = largest cid
+        cells = (last - rev_idx).astype("int32")
+        if not with_dist:
+            return cells, None
+        picked = scores[np.arange(len(rev_idx)), rev_idx]
+        return cells, (X**2).sum(axis=1) - 2.0 * picked
+
+    return kernel
+
+
 def assign_cells_arrow(
     df: DataFrame,
     centroids: np.ndarray,
@@ -65,21 +91,15 @@ def assign_cells_arrow(
     out_col: str,
     dist_col: str | None = None,
 ) -> DataFrame:
-    """``df`` + ``out_col`` = argmin-centroid cell id (int32) via one
-    BLAS matmul per Arrow batch (``mapInArrow``, zero-copy list
-    buffers), plus the exact squared L2 distance when ``dist_col`` is
-    given. Ties break toward the LARGER id — the ``array_max(struct)``
-    rule of the expression path, so the two paths agree exactly (the
-    centroid matrix ships reversed because argmax over a reversed
-    numpy VIEW falls off the contiguous fast path, measured 40x the
-    matmul). NULL vectors pass through as NULL cell id (and NULL
+    """``df`` + ``out_col`` = argmin-centroid cell id (int32) via
+    :func:`_cell_kernel` once per Arrow batch (``mapInArrow``, zero-copy
+    list buffers), plus the exact squared L2 distance when ``dist_col``
+    is given. NULL vectors pass through as NULL cell id (and NULL
     distance) — the same semantics the expression path gets for free —
     so the auto expr/arrow switch never changes failure behavior."""
     from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
-    C = np.asarray(centroids, dtype=np.float64)[::-1].copy()
-    k_total = len(C)
-    half_sq = 0.5 * (C**2).sum(axis=1)
+    kernel = _cell_kernel(centroids)
     fields = list(df.schema.fields) + [StructField(out_col, IntegerType())]
     if dist_col is not None:
         fields.append(StructField(dist_col, DoubleType()))
@@ -106,12 +126,9 @@ def assign_cells_arrow(
             dists = np.zeros(rb.num_rows, dtype="float64")
             if n_valid:
                 X = flat.astype(np.float64, copy=False).reshape(n_valid, -1)
-                scores = X @ C.T - half_sq  # argmax == argmin ||x-c||
-                rev_idx = scores.argmax(axis=1)  # first max = largest cid
-                cells[valid] = ((k_total - 1) - rev_idx).astype("int32")
-                if dist_col is not None:
-                    picked = scores[np.arange(len(rev_idx)), rev_idx]
-                    dists[valid] = (X**2).sum(axis=1) - 2.0 * picked
+                cells[valid], d = kernel(X, with_dist=dist_col is not None)
+                if d is not None:
+                    dists[valid] = d
             mask = None if col.null_count == 0 else ~valid
             arrays = list(rb.columns) + [pa.array(cells, mask=mask)]
             names = list(rb.schema.names) + [out_col]
@@ -250,11 +267,14 @@ class IVFIndex(_CellIndex):
         return len(self.centroids)
 
     def assign(self, df: DataFrame, method: str = "auto") -> DataFrame:
-        """``df`` + ``centroid_id``: the expression path composes into
-        any plan (pushdown, streaming projections) and stays the
-        default at small nlist; past ``ASSIGN_ARROW_MIN_K`` cells the
-        Arrow BLAS path takes over (see :func:`assign_cells_arrow` for
-        the measured cliff). Both break ties identically."""
+        """``df`` + ``centroid_id`` for a DataFrame batch: the expression
+        path composes into any plan (pushdown, streaming projections)
+        and stays the default at small nlist; past ``ASSIGN_ARROW_MIN_K``
+        cells the Arrow BLAS path takes over (see
+        :func:`assign_cells_arrow` for the measured cliff). Both break
+        ties identically. Rows that are already driver-side numpy
+        (wire-format store writes) skip Spark entirely through
+        :meth:`assign_matrix`, the same kernel as the Arrow path."""
         if method not in ("auto", "expr", "arrow"):
             raise ValueError(f"method must be auto|expr|arrow (got {method!r})")
         if method == "auto":
@@ -262,6 +282,13 @@ class IVFIndex(_CellIndex):
         if method == "expr":
             return df.withColumn("centroid_id", self.assign_expr())
         return assign_cells_arrow(df, self.centroids, self.vec_col, "centroid_id")
+
+    def assign_matrix(self, X: np.ndarray) -> np.ndarray:
+        """int32 cell ids for a driver-side ``(n, dim)`` row matrix —
+        :func:`_cell_kernel`, the kernel behind the Arrow path, so the
+        store's list-input writes and its DataFrame writes at
+        ``nlist >= ASSIGN_ARROW_MIN_K`` share one tie rule."""
+        return _cell_kernel(self.centroids)(np.asarray(X, dtype=np.float64))[0]
 
     def assign_expr(self) -> Column:
         """centroid_id as a column expression: argmin over centroid
@@ -273,20 +300,17 @@ class IVFIndex(_CellIndex):
         ``transform`` lambda over a literal nlist x dim matrix — a single
         shared dot-product subtree, not nlist inlined copies (nlist
         copies made Catalyst analysis + codegen the dominant cost of
-        every plan touching the index).
+        every plan touching the index). The matrix is built by
+        :func:`vector_literal` as ONE folded literal: building it per
+        element cost ``nlist * dim`` py4j round trips per plan.
 
         A NULL vector yields a NULL centroid_id — explicitly guarded,
         because struct comparison under ``array_max`` falls through to
         the cid field when every score is NULL and would otherwise
         silently park NULL rows in the last cell. The Arrow path
         (``assign_cells_arrow``) masks NULL rows to the same effect."""
-        cmat = F.array(
-            *[
-                F.array(*[F.lit(float(x)) for x in c]).alias("c")
-                for c in self.centroids
-            ]
-        )
-        half_sq = F.array(*[F.lit(float(c @ c) / 2.0) for c in self.centroids])
+        cmat = vector_literal(self.centroids)
+        half_sq = vector_literal([float(c @ c) / 2.0 for c in self.centroids])
         scored = F.transform(
             cmat,
             lambda c, i: F.struct(
@@ -661,7 +685,7 @@ def lsh_bucket_expr(
     Pure column expression — one dot product per plane."""
     bits = [
         F.when(
-            dot_product(vec_col, F.lit(p.tolist()).cast("array<double>")) > 0,
+            dot_product(vec_col, vector_literal(p)) > 0,
             F.lit(1 << i).cast("long"),
         ).otherwise(F.lit(0).cast("long"))
         for i, p in enumerate(planes)

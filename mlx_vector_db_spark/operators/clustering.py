@@ -22,6 +22,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mlx_vector_db_spark.functions.vector import vector_literal
 from mlx_vector_db_spark.operators.ann import (
     ASSIGN_ARROW_MIN_K,
     IVFIndex,
@@ -90,9 +91,7 @@ class KMeansModel:
         )
 
     def _sq_dist_expr(self) -> Column:
-        cmat = F.array(
-            *[F.array(*[F.lit(float(x)) for x in c]) for c in self.centroids]
-        )
+        cmat = vector_literal(self.centroids)
         centroid = F.element_at(cmat, F.col("cluster_id") + 1)
         diff = F.zip_with(
             F.col(self.index.vec_col).cast("array<double>"),

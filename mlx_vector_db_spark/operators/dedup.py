@@ -107,7 +107,6 @@ def _signature_numpy(hdf: DataFrame, num_hashes: int, a: list[int], b: list[int]
 
     A = np.asarray(a, dtype=np.int64)
     B = np.asarray(b, dtype=np.int64)
-    P = _MERSENNE_P
     K = int(num_hashes)
     out_schema = StructType(
         list(hdf.schema.fields)
@@ -118,53 +117,93 @@ def _signature_numpy(hdf: DataFrame, num_hashes: int, a: list[int], b: list[int]
         import pyarrow as pa
 
         for rb in batches:
-            n_rows = rb.num_rows
-            if n_rows == 0:
+            if rb.num_rows == 0:
                 continue
-            sh = rb.column(rb.schema.get_field_index("_sh"))
-            # raw child values + absolute offsets: exact regardless of
-            # batch slicing or NULL entries (a null list spans zero
-            # child elements but keeps monotonic offsets)
-            off = sh.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals64 = sh.values.to_numpy(zero_copy_only=False)
-            starts, ends = off[:-1], off[1:]
-            empty = starts == ends
-            if sh.null_count:
-                empty = empty | np.asarray(sh.is_null())
-            n_elems = vals64.shape[0] if vals64.ndim else 0
-            sig_cols = []
-            if n_elems == 0 or bool(empty.all()):
-                sent = np.full(n_rows, P, dtype=np.int64)
-                sig_cols = [pa.array(sent)] * K
-            else:
-                # fold64 -> 32-bit registers once per batch
-                h = (
-                    np.asarray(vals64, dtype=np.int64) & np.int64((1 << 32) - 1)
-                )
-                # reduceat needs every index < n_elems; empty rows are
-                # patched afterwards so the clamped garbage never shows
-                starts_c = np.minimum(starts, n_elems - 1)
-                buf = np.empty_like(h)
-                tmp = np.empty_like(h)
-                for k in range(K):
-                    np.multiply(h, A[k], out=buf)
-                    buf += B[k]
-                    # branchless Mersenne fold == pmod(buf, P) for
-                    # 0 <= buf < 2^63 (see docstring)
-                    np.bitwise_and(buf, P, out=tmp)
-                    buf >>= np.int64(61)
-                    tmp += buf
-                    tmp -= np.where(tmp >= P, np.int64(P), np.int64(0))
-                    mins = np.minimum.reduceat(tmp, starts_c)
-                    if empty.any():
-                        mins[empty] = P
-                    sig_cols.append(pa.array(mins))
+            mins = _minhash_mins(rb.column(rb.schema.get_field_index("_sh")), A, B)
             yield pa.RecordBatch.from_arrays(
-                [rb.column(i) for i in range(rb.num_columns)] + sig_cols,
+                [rb.column(i) for i in range(rb.num_columns)]
+                + [pa.array(m) for m in mins],
                 names=list(rb.schema.names) + [f"_h{k}" for k in range(K)],
             )
 
     return hdf.mapInArrow(kernel, out_schema)
+
+
+def _signature_expr(
+    hdf: DataFrame, num_hashes: int, a: list[int], b: list[int]
+) -> DataFrame:
+    """The JVM form of :func:`_signature_numpy` (``sig_kernel="expr"``),
+    same input and output frames: the parity oracle of the numpy kernel.
+
+    K nested-HOF signature columns built as ONE JVM-parsed selectExpr
+    instead of K py4j Column trees: semantically identical (parity
+    pinned by test_minhash_selectexpr_parity), but the Column form cost
+    ~3.3s of pure DRIVER time per invocation at K=128 (~10 py4j
+    round-trips per function x 128 — measured r13: 3.81s Column build
+    vs 0.53s selectExpr parse). The empty-array coalesce keeps the
+    sentinel signature for empty texts."""
+    fdf = hdf.select(
+        "_id", "_sh", F.transform("_sh", lambda h: _fold32(h)).alias("_f")
+    )
+    p = _MERSENNE_P
+    sig_exprs = [
+        f"coalesce(array_min(transform(_f, h -> "
+        f"pmod(h * {a[k]}L + {b[k]}L, {p}L))), {p}L) AS _h{k}"
+        for k in range(num_hashes)
+    ]
+    return fdf.selectExpr("_id", "_sh", *sig_exprs)
+
+
+def _minhash_mins(sh, A, B) -> list:
+    """The K per-row minima of one ``list<int64>`` shingle-hash column
+    (a pyarrow ``ListArray``): ``min((fold32(h) * A[k] + B[k]) mod P)``
+    per row, the sentinel P for empty and NULL rows.
+
+    Exact for any batch layout. The raw child buffer is read through
+    the column's own offsets, which stay absolute when the array is a
+    slice, and only ``[off[0], off[-1])`` is reduced: values outside
+    the slice never enter a row. ``np.minimum.reduceat`` reduces each
+    row's segment from its start to the NEXT start and the last one to
+    the end of the buffer, so the permuted values are padded with one
+    sentinel P at ``off[-1]``: the last segment then ends at the
+    column's own end, and every start (even of trailing empty rows)
+    stays a valid index. P never wins a min over a non-empty row
+    (permuted values are < P). Empty rows in the middle read their
+    successor's first value and are overwritten with P."""
+    import numpy as np
+
+    P = _MERSENNE_P
+    n_rows = len(sh)
+    off = sh.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    lo, hi = int(off[0]), int(off[-1])
+    starts = off[:-1] - lo
+    empty = starts == off[1:] - lo
+    if sh.null_count:
+        # a NULL row may still span child values: mask it explicitly
+        empty = empty | np.asarray(sh.is_null())
+    if hi == lo or bool(empty.all()):
+        return [np.full(n_rows, P, dtype=np.int64)] * len(A)
+    # fold64 -> 32-bit registers once per batch
+    vals = sh.values.to_numpy(zero_copy_only=False)[lo:hi]
+    h = np.asarray(vals, dtype=np.int64) & np.int64((1 << 32) - 1)
+    buf = np.empty_like(h)
+    padded = np.empty(len(h) + 1, dtype=np.int64)
+    padded[-1] = P
+    tmp = padded[:-1]
+    out = []
+    for a_k, b_k in zip(A, B):
+        np.multiply(h, a_k, out=buf)
+        buf += b_k
+        # branchless Mersenne fold == pmod(buf, P) for 0 <= buf < 2^63
+        # (see _signature_numpy)
+        np.bitwise_and(buf, P, out=tmp)
+        buf >>= np.int64(61)
+        tmp += buf
+        tmp -= np.where(tmp >= P, np.int64(P), np.int64(0))
+        mins = np.minimum.reduceat(padded, starts)
+        mins[empty] = P
+        out.append(mins)
+    return out
 
 
 def _hashed_shingles_from_tokens(
@@ -331,27 +370,6 @@ def fanout_autocap(
         best = JACCARD_AUTOCAP_MIN
     return min(JACCARD_AUTOCAP_MAX, max(JACCARD_AUTOCAP_MIN, int(best)))
 
-    w = Window.orderBy("_f").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cum = hist.withColumn(
-        "_cum",
-        F.sum(F.col("_cnt") * F.expr("_f * (_f - 1) DIV 2")).over(w),
-    )
-    return (
-        cum.crossJoin(F.broadcast(nrows_df))
-        .where(F.col("_cum") <= F.lit(int(pair_budget)) * F.col("_nr"))
-        .agg(
-            F.least(
-                F.lit(JACCARD_AUTOCAP_MAX),
-                F.greatest(
-                    F.lit(JACCARD_AUTOCAP_MIN),
-                    F.coalesce(F.max("_f"), F.lit(JACCARD_AUTOCAP_MIN)),
-                ),
-            )
-            .cast("long")
-            .alias("_cap")
-        )
-    )
-
 
 def minhash_lsh_pairs(
     df: DataFrame,
@@ -465,25 +483,7 @@ def minhash_lsh_pairs(
         # numpy memory-bandwidth sweep.
         sig = _signature_numpy(hdf, num_hashes, a, b)
     else:
-        fdf = hdf.select(
-            "_id", "_sh", F.transform("_sh", lambda h: _fold32(h)).alias("_f")
-        )
-
-        # K nested-HOF signature columns built as ONE JVM-parsed
-        # selectExpr instead of K py4j Column trees: semantically
-        # identical (parity pinned by test_minhash_selectexpr_parity),
-        # but the Column form cost ~3.3s of pure DRIVER time per
-        # invocation at K=128 (~10 py4j round-trips per function x 128
-        # — measured r13: 3.81s Column build vs 0.53s selectExpr
-        # parse). The empty-array coalesce keeps the sentinel signature
-        # for empty texts.
-        p = _MERSENNE_P
-        sig_exprs = [
-            f"coalesce(array_min(transform(_f, h -> "
-            f"pmod(h * {a[k]}L + {b[k]}L, {p}L))), {p}L) AS _h{k}"
-            for k in range(num_hashes)
-        ]
-        sig = fdf.selectExpr("_id", "_sh", *sig_exprs)
+        sig = _signature_expr(hdf, num_hashes, a, b)
     # materialize once, lineage-truncated: banding reads it, and the
     # verify joins read it twice more. A lazy localCheckpoint (not
     # persist) so the blocks are context-cleaned when the frame goes out

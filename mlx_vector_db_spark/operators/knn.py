@@ -49,6 +49,7 @@ from mlx_vector_db_spark.functions.vector import (
     metric_ascending,
     score_for_metric,
     similarity_for_metric,
+    vector_literal,
 )
 from mlx_vector_db_spark.operators.topk import top_k_per_group
 from mlx_vector_db_spark.rebalance import rebalance_for_compute
@@ -243,7 +244,7 @@ def knn_query(
     filtered = _drop_null_vectors(
         apply_metadata_filter(vectors, filter_metadata), vec_col
     )
-    q = F.lit([float(x) for x in query_vector]).cast("array<double>")
+    q = vector_literal(query_vector)
     q_norm = (
         F.lit(float(np.sqrt(np.sum(np.square(np.asarray(query_vector, dtype=np.float64))))))
         if metric == "cosine"

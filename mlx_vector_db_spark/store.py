@@ -58,7 +58,6 @@ from __future__ import annotations
 
 import contextlib
 import json
-import math
 import os
 import shutil
 import time
@@ -73,7 +72,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mlx_vector_db_spark.functions.vector import METRICS, l2_norm
+from mlx_vector_db_spark.functions.vector import METRICS, l2_norm, vector_literal
 from mlx_vector_db_spark.operators import knn
 from mlx_vector_db_spark.operators.knn import knn_join, knn_join_blocked, knn_query
 
@@ -451,7 +450,7 @@ class VectorStoreCatalog:
         fleet = parts[0]
         for p in parts[1:]:
             fleet = fleet.unionByName(p)
-        q = F.lit([float(x) for x in query_vector]).cast("array<double>")
+        q = vector_literal(query_vector)
         scored = fleet.withColumn(
             "score", score_for_metric(metric, "embedding", q)
         )
@@ -927,83 +926,166 @@ class VectorStore:
         incremental centroid assignment. Shared by append and upsert.
 
         Returns ``(batch_df, n_known)``: for wire-format list input the
-        row count is known driver-side (and dimensions are validated in
-        the same pass that builds the rows — zero Spark jobs); for
-        DataFrame input ``n_known`` is None and the caller folds count +
-        dimension validation into ONE aggregation job (high-frequency
-        micro-batch ingest must not pay one job per check)."""
-        spark = self.catalog.spark
-        dim = self.config.dimension
+        batch is built driver-side (:meth:`_arrow_batch` — zero Spark
+        jobs, row count known); for DataFrame input ``n_known`` is None
+        and the caller folds count + dimension validation into ONE
+        aggregation job (high-frequency micro-batch ingest must not pay
+        one job per check). The q8/PQ/BQ codes are layered on top of
+        either form the same way."""
         if isinstance(vectors, DataFrame):
-            df = vectors
-            if "embedding" not in df.columns:
-                raise ValueError("DataFrame input must have an 'embedding' column")
-            if require_ids and "id" not in df.columns:
-                raise ValueError("upsert requires an 'id' column (the merge key)")
+            out, n_known = self._df_batch(vectors, require_ids), None
         else:
-            n = len(vectors)
-            if metadata is not None and len(metadata) != n:
-                raise ValueError(
-                    f"vectors ({n}) and metadata ({len(metadata)}) lengths differ"
-                )
-            if ids is not None and len(ids) != n:
-                raise ValueError(f"vectors ({n}) and ids ({len(ids)}) lengths differ")
-            if require_ids and ids is None:
-                raise ValueError("upsert requires explicit ids (the merge key)")
+            out = self._arrow_batch(vectors, metadata, ids, require_ids)
+            n_known = len(vectors)
+        if self.config.quantize and "q8" not in out.columns:
+            from mlx_vector_db_spark.functions.vector import quantize_int8
+
+            out = out.withColumn("q8", quantize_int8("embedding"))
+        pqc = self._pq()
+        if pqc is not None and "pq_code" not in out.columns:
+            # incremental PQ maintenance: encoding is a stateless
+            # mapInPandas projection over the new batch only (residual
+            # codes need the centroid_id assigned before it)
+            out = pqc.encode(out, centroids=self._pq_centroids())
+        bqm = self._bq()
+        if bqm is not None and "bq_code" not in out.columns:
+            # incremental BQ maintenance: sign-bit packing is a
+            # stateless mapInArrow projection over the new batch only
+            out = bqm.encode(out, code_col="bq_code")
+        return out.select(*[f.name for f in self.schema.fields]), n_known
+
+    def _arrow_batch(
+        self,
+        vectors: Sequence[Sequence[float]],
+        metadata: Sequence[Mapping[str, Any]] | None,
+        ids: Sequence[int] | None,
+        require_ids: bool,
+    ) -> DataFrame:
+        """Wire-format list input as ONE Arrow table handed to Spark.
+
+        Everything Spark would otherwise compute per row is computed
+        here in numpy, once per batch: validation, the float32
+        embedding, ``norm`` and (IVF) ``centroid_id``. Building the
+        batch as Python rows instead cost a type-verifier call per
+        vector component, and the engine-computed columns then ran as
+        interpreted ``aggregate``/``zip_with`` lambdas per row behind an
+        ``nlist * dim``-literal centroid matrix.
+
+        Bit-parity with the DataFrame path: ``norm`` is
+        ``sqrt(cumsum(x*x)[-1])`` over the float32 values widened to
+        float64 — ``cumsum`` adds strictly left to right, the same
+        order as :func:`l2_norm`'s ``aggregate``. Cell ids come from
+        :meth:`IVFIndex.assign_matrix`, the kernel of the Arrow assign
+        path, with the expression path's tie rule."""
+        import numpy as np
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+        from pyspark.sql.types import _make_type_verifier
+
+        from mlx_vector_db_spark.operators.ann import IVFIndex
+
+        dim = self.config.dimension
+        n = len(vectors)
+        if metadata is not None and len(metadata) != n:
+            raise ValueError(
+                f"vectors ({n}) and metadata ({len(metadata)}) lengths differ"
+            )
+        if ids is not None and len(ids) != n:
+            raise ValueError(f"vectors ({n}) and ids ({len(ids)}) lengths differ")
+        if require_ids and ids is None:
+            raise ValueError("upsert requires explicit ids (the merge key)")
+        if any(len(vec) != dim for vec in vectors):
+            raise ValueError(f"embedding dimension mismatch: store expects {dim}")
+        # None components become NaN here, so they fail the same
+        # finiteness check; it runs on the float32 values that are
+        # stored, so float32 overflow (|x| > 3.4e38) is rejected too
+        with np.errstate(over="ignore"):
+            x32 = np.array(vectors, dtype=np.float64).reshape(n, dim).astype(np.float32)
+        if not np.isfinite(x32).all():
+            # same contract as the DataFrame path's finiteness leg
+            raise ValueError(
+                "embedding rows with null/NaN/Inf components — "
+                "stores only accept fully populated finite vectors"
+            )
+        x64 = x32.astype(np.float64)
+
+        if ids is None:
             # max(id)+1, NOT row count: after delete_vectors shrinks the
             # store, count()-based ids would collide with surviving rows
-            # (and duplicate ids corrupt every id-keyed op: delete, upsert's
-            # anti-join, query results). One column-pruned agg scan.
-            base = self._next_id() if ids is None else 0
-            rows = []
-            for i, vec in enumerate(vectors):
-                if len(vec) != dim:
-                    # validated here, in the pass that already walks every
-                    # row — not as a separate Spark job
-                    raise ValueError(
-                        f"embedding dimension mismatch: store expects {dim}"
-                    )
-                emb = [float(x) for x in vec]
-                if not all(math.isfinite(v) for v in emb):
-                    # same contract as the DataFrame path's finiteness
-                    # leg, in the walk that already touches every value
-                    raise ValueError(
-                        "embedding rows with null/NaN/Inf components — "
-                        "stores only accept fully populated finite vectors"
-                    )
-                md = dict(metadata[i]) if metadata is not None else {}
-                promoted = {
-                    k: md.pop(k, None) for k in self.config.promoted_keys
-                }
-                rows.append(
-                    {
-                        "id": int(ids[i]) if ids is not None else base + i,
-                        "embedding": emb,
-                        **promoted,
-                        "meta": {k: str(v) for k, v in md.items()},
-                    }
-                )
-            # norm, code, and index columns are engine-computed, never
-            # caller input
-            in_fields = [
-                f
-                for f in self.schema.fields
-                if f.name not in ("norm", "centroid_id", "q8", "pq_code", "bq_code")
-            ]
-            df = spark.createDataFrame(rows, T.StructType(in_fields))
-            if ids is None:
-                # auto-assigned base..base+n-1: advance the cache now (a
-                # failed write just leaves a harmless id gap)
-                self._max_id_seen = base + len(rows) - 1
-            else:
-                self._note_ids(ids)
-
-        if isinstance(vectors, DataFrame):
-            # caller-supplied (or monotonic-assigned) ids we never see
-            # driver-side: the cache can't be advanced, only invalidated
-            n_known = None
+            # (and duplicate ids corrupt every id-keyed op: delete,
+            # upsert's anti-join, query results). One column-pruned agg
+            # scan, or none while the max-id cache is warm.
+            base = self._next_id()
+            id_arr = np.arange(base, base + n, dtype=np.int64)
         else:
-            n_known = len(rows)
+            id_arr = np.array([int(i) for i in ids], dtype=np.int64)
+
+        # promoted keys leave the meta map for typed columns; each value
+        # passes the same verifier createDataFrame applies to Python rows
+        promoted = {k: [None] * n for k in self.config.promoted_keys}
+        meta_keys: list[str] = []
+        meta_vals: list[str] = []
+        meta_offsets = [0]
+        for i in range(n):
+            if metadata is not None:
+                for k, v in dict(metadata[i]).items():
+                    if k in promoted:
+                        promoted[k][i] = v
+                    else:
+                        meta_keys.append(k)
+                        meta_vals.append(str(v))
+            meta_offsets.append(len(meta_keys))
+
+        offsets = np.arange(0, (n + 1) * dim, dim, dtype=np.int32)
+        cols: dict[str, pa.Array] = {
+            "id": pa.array(id_arr),
+            "embedding": pa.ListArray.from_arrays(offsets, pa.array(x32.reshape(-1))),
+            "norm": pa.array(np.sqrt(np.cumsum(x64 * x64, axis=1)[:, -1])),
+        }
+        for key, tname in self.config.promoted_keys.items():
+            verify = _make_type_verifier(_PROMOTED_TYPES[tname], name=key)
+            for v in promoted[key]:
+                verify(v)
+            cols[key] = pa.array(
+                promoted[key], type=to_arrow_type(_PROMOTED_TYPES[tname])
+            )
+        cols["meta"] = pa.MapArray.from_arrays(
+            pa.array(meta_offsets, type=pa.int32()),
+            pa.array(meta_keys, type=pa.string()),
+            pa.array(meta_vals, type=pa.string()),
+        )
+        ivf = self._ivf()
+        if isinstance(ivf, IVFIndex):
+            # incremental index maintenance over the new batch only —
+            # never a rebuild (the reference rebuilt its whole HNSW
+            # graph per add, :110-113)
+            cols["centroid_id"] = pa.array(ivf.assign_matrix(x64))
+        fields = [f for f in self.schema.fields if f.name in cols]
+        out = self.catalog.spark.createDataFrame(
+            pa.table(cols).select([f.name for f in fields]), T.StructType(fields)
+        )
+        if ivf is not None and "centroid_id" not in cols:
+            # LSH buckets stay a column expression: sign bits of JVM
+            # dot products, bit-identical to a DataFrame-input write
+            out = ivf.assign(out).withColumn(
+                "centroid_id", F.col("centroid_id").cast("int")
+            )
+        if ids is None:
+            # auto-assigned base..base+n-1: advance the cache now (a
+            # failed write just leaves a harmless id gap)
+            self._max_id_seen = base + n - 1
+        else:
+            self._note_ids(ids)
+        return out
+
+    def _df_batch(self, df: DataFrame, require_ids: bool) -> DataFrame:
+        """DataFrame input: default the missing id/meta/promoted columns
+        and compute the engine-owned ones as column expressions
+        (validation is the caller's one aggregation job)."""
+        if "embedding" not in df.columns:
+            raise ValueError("DataFrame input must have an 'embedding' column")
+        if require_ids and "id" not in df.columns:
+            raise ValueError("upsert requires an 'id' column (the merge key)")
         out = df
         if "id" not in out.columns:
             # offset by the store's next free id: bare monotonic ids start
@@ -1020,40 +1102,23 @@ class VectorStore:
             )
         out = out.withColumn("embedding", F.col("embedding").cast("array<float>"))
         out = out.withColumn("norm", l2_norm("embedding"))
-        if self.config.quantize and "q8" not in out.columns:
-            from mlx_vector_db_spark.functions.vector import quantize_int8
-
-            out = out.withColumn("q8", quantize_int8("embedding"))
         for key, tname in self.config.promoted_keys.items():
             if key not in out.columns:
                 out = out.withColumn(key, F.lit(None).cast(_PROMOTED_TYPES[tname]))
         ivf = self._ivf()
         if ivf is not None and "centroid_id" not in out.columns:
             # incremental index maintenance: assignment runs over the
-            # new batch only — never a rebuild (the reference rebuilt
-            # its whole HNSW graph per add, :110-113). IVFIndex.assign
-            # picks the expression path at small nlist (composes into
-            # the ingest projection) and the Arrow BLAS path past
-            # ASSIGN_ARROW_MIN_K cells, where merely BUILDING the
-            # literal expression would cost O(nlist*dim) py4j calls
-            # PER BATCH.
+            # new batch only. IVFIndex.assign picks the expression path
+            # at small nlist (composes into the ingest projection) and
+            # the Arrow BLAS path past ASSIGN_ARROW_MIN_K cells.
             out = ivf.assign(out).withColumn(
                 "centroid_id", F.col("centroid_id").cast("int")
             )
-        pqc = self._pq()
-        if pqc is not None and "pq_code" not in out.columns:
-            # incremental PQ maintenance: encoding is a stateless
-            # mapInPandas projection over the new batch only (residual
-            # codes need the centroid_id assigned just above)
-            out = pqc.encode(out, centroids=self._pq_centroids())
-        bqm = self._bq()
-        if bqm is not None and "bq_code" not in out.columns:
-            # incremental BQ maintenance: sign-bit packing is a
-            # stateless mapInArrow projection over the new batch only
-            out = bqm.encode(out, code_col="bq_code")
-        if isinstance(vectors, DataFrame):
-            self._max_id_seen = None  # ids resolved executor-side
-        return out.select(*[f.name for f in self.schema.fields]), n_known
+        # caller-supplied (or monotonic-assigned) ids we never see
+        # driver-side: the max-id cache can't be advanced, only
+        # invalidated
+        self._max_id_seen = None
+        return out
 
     def _count_and_validate(self, batch: DataFrame) -> int:
         """ONE aggregation job over a DataFrame batch: row count +
@@ -1135,9 +1200,11 @@ class VectorStore:
         format, service/models.py:38). Dimension and vector/metadata
         alignment are validated like the reference (models.py:41-46).
 
-        Job budget: list input pays ZERO extra jobs (count and dims are
-        known driver-side; only the write runs, plus one max-id scan when
-        ids are auto-assigned); DataFrame input pays ONE combined
+        Job budget: list input pays ZERO extra jobs — the batch is
+        validated and built driver-side as one Arrow table with ``norm``
+        and the IVF ``centroid_id`` already computed in numpy, so only
+        the write runs (plus one max-id scan when ids are auto-assigned
+        on a cold handle); DataFrame input pays ONE combined
         count+validate aggregation before the write.
         """
         out, n_known = self._prepare_batch(vectors, metadata, ids)
@@ -1478,32 +1545,42 @@ class VectorStore:
         cell dirs. The full staging swap runs only when every file
         overlaps the batch's id range (or the store is empty).
 
-        Job budget: ONE aggregation over the batch (count + duplicate +
-        dimension + id-range together) and ONE write; all before/after
-        row counts ride the write job as ``Observation`` metrics.
+        Job budget: ONE write; all before/after row counts ride the
+        write job as ``Observation`` metrics. Wire-format list input is
+        validated driver-side while its batch is built (count,
+        duplicates, dimension and id range are known without a job);
+        DataFrame input adds ONE cached aggregation over the batch
+        (count + duplicate + dimension + id-range together).
         """
         from pyspark.sql import Observation
 
-        new, _ = self._prepare_batch(vectors, metadata, ids, require_ids=True)
-        new = new.cache()
-        dim = self.config.dimension
-        row = new.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct(F.col("id")).alias("n_ids"),
-            F.sum((F.size("embedding") != F.lit(dim)).cast("long")).alias("bad"),
-            F.min("id").alias("lo"),
-            F.max("id").alias("hi"),
-        ).first()
-        n_new = int(row["n"])
+        new, n_known = self._prepare_batch(vectors, metadata, ids, require_ids=True)
+        if n_known is not None:
+            n_new = n_known
+            id_list = [int(i) for i in ids]  # type: ignore[union-attr]
+            n_ids = len(set(id_list))
+            lo, hi = (min(id_list), max(id_list)) if id_list else (None, None)
+        else:
+            new = new.cache()
+            dim = self.config.dimension
+            row = new.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.count_distinct(F.col("id")).alias("n_ids"),
+                F.sum((F.size("embedding") != F.lit(dim)).cast("long")).alias("bad"),
+                F.min("id").alias("lo"),
+                F.max("id").alias("hi"),
+            ).first()
+            n_new, n_ids = int(row["n"]), int(row["n_ids"])
+            lo, hi = row["lo"], row["hi"]
+            if row["bad"]:
+                new.unpersist()
+                raise ValueError(f"embedding dimension mismatch: store expects {dim}")
         if n_new == 0:
-            # empty batch: a no-op MERGE, not a crash (the agg's lo/hi
-            # are NULL and must never reach _partition_files_by_ids)
+            # empty batch: a no-op MERGE, not a crash (lo/hi are None
+            # and must never reach _partition_files_by_ids)
             new.unpersist()
             return 0, 0
-        if row["bad"]:
-            new.unpersist()
-            raise ValueError(f"embedding dimension mismatch: store expects {dim}")
-        if int(row["n_ids"]) != n_new:
+        if n_ids != n_new:
             new.unpersist()
             raise ValueError(
                 "duplicate ids in upsert batch: multiple source rows would "
@@ -1513,9 +1590,7 @@ class VectorStore:
         spark = self.catalog.spark
         fields = [f.name for f in self.schema.fields]
         if self.data_dir.exists():
-            touched, untouched = self._partition_files_by_ids(
-                lo=int(row["lo"]), hi=int(row["hi"])
-            )
+            touched, untouched = self._partition_files_by_ids(lo=int(lo), hi=int(hi))
             if not touched:
                 # no existing file can contain a matching id: pure append
                 self._write_batch(new, n_new, mode="append")
@@ -2711,7 +2786,7 @@ class VectorStore:
         from mlx_vector_db_spark.operators.knn import _order, apply_metadata_filter
 
         filtered = apply_metadata_filter(df, filter_metadata)
-        q = F.lit([float(x) for x in query_vector]).cast("array<double>")
+        q = vector_literal(query_vector)
         approx = score_for_metric(metric, dequantize_int8("q8"), q)
         cands = (
             filtered.select("id", F.col("q8"))

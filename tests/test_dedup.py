@@ -683,3 +683,66 @@ def test_minhash_pairs_kernel_parity(spark, corpus_df):
         )
     )
     assert a == b
+
+
+def test_minhash_kernel_adversarial_layouts(spark):
+    """The numpy signature kernel is bit-exact against the JVM form
+    (``sig_kernel="expr"``) whatever the Arrow batch layout: a batch
+    ending in an empty row, one ending in a NULL row, batches split by a
+    tiny ``arrow.maxRecordsPerBatch``, and sliced arrays. A trailing
+    empty/NULL row used to cut the previous row's segment short (its
+    last value dropped out of the min), and a slice's last row read
+    past the slice."""
+    import pyarrow as pa
+
+    num_hashes = 8
+    a, b = D._minhash_coeffs(num_hashes, 7)
+    rng = np.random.default_rng(3)
+    sh = []
+    for i in range(12):
+        if i % 4 == 1:
+            sh.append([])
+        elif i % 4 == 3:
+            sh.append(None)
+        else:
+            # several registers per row: a truncated segment loses
+            # the last one, which holds some hash's minimum
+            vals = rng.integers(-(1 << 62), 1 << 62, size=int(rng.integers(3, 7)))
+            sh.append([int(v) for v in vals])
+    rows = list(enumerate(sh))
+    schema = "_id long, _sh array<bigint>"
+
+    def sig_rows(frame):
+        return {r[0]: tuple(r[2:]) for r in frame.collect()}
+
+    ref = sig_rows(
+        D._signature_expr(spark.createDataFrame(rows, schema), num_hashes, a, b)
+    )
+
+    def numpy_rows(layout):
+        hdf = spark.createDataFrame(layout, schema).coalesce(1)
+        return sig_rows(D._signature_numpy(hdf, num_hashes, a, b))
+
+    ends_empty = rows[:-2]  # ..., (8, [..]), (9, [])
+    ends_null = rows  # ..., (10, [..]), (11, None)
+    assert ends_empty[-1][1] == [] and ends_null[-1][1] is None
+    assert numpy_rows(ends_empty) == {i: ref[i] for i, _ in ends_empty}
+    assert numpy_rows(ends_null) == {i: ref[i] for i, _ in ends_null}
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        for size in ("2", "3"):  # batch ends on empty rows, then NULL rows
+            spark.conf.set(key, size)
+            assert numpy_rows(rows) == ref, size
+    finally:
+        spark.conf.set(key, old)
+
+    arr = pa.array(sh, type=pa.list_(pa.int64()))
+    A = np.asarray(a, dtype=np.int64)
+    B = np.asarray(b, dtype=np.int64)
+    for lo in range(len(sh)):
+        for hi in range(lo + 1, len(sh) + 1):
+            mins = D._minhash_mins(arr.slice(lo, hi - lo), A, B)
+            got = [tuple(int(m[r]) for m in mins) for r in range(hi - lo)]
+            assert got == [ref[i] for i in range(lo, hi)], (lo, hi)

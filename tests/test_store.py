@@ -358,7 +358,8 @@ def test_add_vectors_job_budget(catalog, spark):
     """High-frequency micro-batch ingest: a wire-format add with explicit
     ids is exactly one Spark job (the write — count and dims are known
     driver-side), and steady-state auto-id adds are too (the max-id scan
-    runs once per store handle, then the cache advances driver-side)."""
+    runs once per store handle, then the cache advances driver-side).
+    A wire-format upsert pays no validation aggregation either."""
     st = catalog.create_store("jb", "m", dimension=4)
     sc = spark.sparkContext
     sc.setJobGroup("jb-explicit", "add with explicit ids")
@@ -374,6 +375,20 @@ def test_add_vectors_job_budget(catalog, spark):
     assert st.count() == 24
     # auto ids continued past both earlier batches — no collisions
     assert st.to_df().select("id").distinct().count() == 24
+    # a wire-format upsert runs no validation job: count, duplicate ids,
+    # dimensions and id range are known driver-side, so a matched
+    # upsert is the write (plus its broadcast of the batch ids) and an
+    # insert-only upsert is the write alone
+    sc.setJobGroup("jb-upsert", "upsert, matched ids")
+    assert st.upsert_vectors([[4.0, 0.0, 0.0, 0.0]] * 2, ids=[1, 2]) == (2, 0)
+    upsert_jobs = sc.statusTracker().getJobIdsForGroup("jb-upsert")
+    sc.setJobGroup("jb-insert", "upsert, new ids only")
+    assert st.upsert_vectors([[5.0, 0.0, 0.0, 0.0]] * 2, ids=[90, 91]) == (0, 2)
+    insert_jobs = sc.statusTracker().getJobIdsForGroup("jb-insert")
+    sc.setJobGroup("jb-done", "")
+    assert len(upsert_jobs) <= 2, f"expected <=2 jobs, got {len(upsert_jobs)}"
+    assert len(insert_jobs) <= 1, f"expected 1 job, got {len(insert_jobs)}"
+    assert st.count() == 26
 
 
 def test_catalog_vacuum_removes_orphaned_staging(catalog):

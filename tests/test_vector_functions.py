@@ -137,3 +137,56 @@ def test_int8_quantization_roundtrip_and_scoring(spark):
     top_q = [r["vec_id"] for r in sorted(both, key=lambda r: (-r["s_q8"], r["vec_id"]))[:10]]
     assert len(set(top_f) & set(top_q)) >= 8
     assert top_f[0] == top_q[0] == 0
+
+
+def test_vector_literal_round_trip_bit_exact(spark):
+    """One folded literal carries every double bit-exactly: NaN, ±Inf,
+    -0.0, subnormals, the smallest normal and shortest-repr values."""
+    vals = [
+        float("nan"), float("inf"), float("-inf"), -0.0, 0.0,
+        5e-324, -2.5e-320, 2.2250738585072014e-308, 1 / 3, -1e308, 0.1,
+        float(np.float32(0.1)),
+    ]
+    got = spark.range(1).select(V.vector_literal(vals).alias("v")).first()["v"]
+    want = np.asarray(vals, dtype=np.float64)
+    assert np.array_equal(
+        np.asarray(got, dtype=np.float64).view(np.int64)[~np.isnan(want)],
+        want.view(np.int64)[~np.isnan(want)],
+    )
+    assert math.isnan(got[0])
+
+    m = RNG.standard_normal((5, 7))
+    m[2, 3] = -0.0
+    got_m = spark.range(1).select(V.vector_literal(m).alias("m")).first()["m"]
+    assert np.array_equal(np.asarray(got_m).view(np.int64), m.view(np.int64))
+    # numpy vectors, float32 rows and python ints convert like float()
+    got_i = spark.range(1).select(
+        V.vector_literal(np.float32([0.1, 2])).alias("v"),
+        V.vector_literal([1, 2]).alias("w"),
+    ).first()
+    assert got_i["v"] == [float(np.float32(0.1)), 2.0]
+    assert got_i["w"] == [1.0, 2.0]
+    with pytest.raises(TypeError):
+        V.vector_literal([1.0, None])
+    with pytest.raises(ValueError):
+        V.vector_literal(np.zeros((2, 2, 2)))
+
+
+def test_vector_literal_folds_to_one_literal(spark):
+    """The optimized plan holds ONE array literal — the JSON parse is
+    constant-folded away — both bare and under a scoring expression."""
+    q = RNG.standard_normal(16)
+    df = spark.range(3).select(V.vector_literal(q).alias("q"))
+    opt = df._jdf.queryExecution().optimizedPlan()
+    lit = opt.projectList().apply(0).child()
+    assert lit.getClass().getSimpleName() == "Literal"
+    assert np.array_equal(np.asarray(df.first()["q"]), q)
+
+    a = RNG.random((4, 16)).astype(np.float32)
+    vecs = _df(spark, a)
+    scored = vecs.select("id", V.dot_product("a", V.vector_literal(q)).alias("s"))
+    plan = scored._jdf.queryExecution().optimizedPlan().toString().lower()
+    assert "from_json" not in plan and "jsontostructs" not in plan
+    got = [r["s"] for r in scored.orderBy("id").collect()]
+    want = a.astype(np.float64) @ q
+    assert np.allclose(got, want, rtol=1e-12, atol=1e-12)
